@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.locationtech.jts.geom.{Geometry, GeometryFactory, GeometryCollection, Polygon, Point, LineString, MultiPolygon, MultiPoint, MultiLineString}
+import org.locationtech.jts.geom.{Geometry, GeometryFactory, GeometryCollection, IntersectionMatrix, Polygon, Point, LineString, MultiPolygon, MultiPoint, MultiLineString}
+import org.locationtech.jts.operation.relateng.RelateNG
 import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader}
 
 /** JTS plumbing shared by the geometry expressions.
@@ -26,6 +27,22 @@ object Jts {
   def parseWkt(s: String): Geometry = wktR.get().read(s)
   def fromWkb(b: Array[Byte]): Geometry = wkbR.get().read(b)
   def toWkb(g: Geometry): Array[Byte] = wkbW.get().write(g)
+
+  /** The engine's one full DE-9IM kernel. Rectangle pairs take the
+    * analytic interval-arithmetic matrix ([[graft.geometry.RectIM]],
+    * ~ns); every other pair goes to JTS `RelateNG`, whose matrix equals
+    * the topology-graph `Geometry.relate` (RelateOp) on valid inputs
+    * (RelateKernelSpec) at about a third of its cost (SCALING.md).
+    * Nothing is prepared or cached across calls: a per-geometry cache
+    * of prepared RelateNG instances grew the retained heap more than
+    * it saved. The result is a fresh matrix the caller may mutate. */
+  def relate(a: Geometry, b: Geometry): IntersectionMatrix =
+    if (a.isRectangle && b.isRectangle) {
+      val e1 = a.getEnvelopeInternal; val e2 = b.getEnvelopeInternal
+      new IntersectionMatrix(graft.geometry.RectIM.matrix(
+        e1.getMinX, e1.getMinY, e1.getMaxX, e1.getMaxY,
+        e2.getMinX, e2.getMinY, e2.getMaxX, e2.getMaxY))
+    } else RelateNG.relate(a, b)
 
   /** Encode a tile coordinate pair into one long (cheap shuffle key). */
   @inline def encodeTile(tx: Long, ty: Long): Long = (tx << 32) | (ty & 0xFFFFFFFFL)
@@ -171,7 +188,7 @@ case class StIntersectionArea(left: Expression, right: Expression)
     copy(l, r)
 }
 
-/** Full DE-9IM verification: one JTS `relate` per pair, all ten
+/** Full DE-9IM verification: one [[Jts.relate]] per pair, all ten
   * topological booleans extracted from the single IntersectionMatrix
   * (mirrors DS-JedAI `model/IM.scala:6-39`). Emitting them all at once
   * means downstream relation-count aggregation is plain sum(when(..)).
@@ -183,27 +200,7 @@ case class StIm(left: Expression, right: Expression)
   override def nullSafeEval(l: Any, r: Any): Any = {
     val g1 = GeomCache.geometry(l.asInstanceOf[Array[Byte]])
     val g2 = GeomCache.geometry(r.asInstanceOf[Array[Byte]])
-    // rectangle-rectangle pairs take the analytic interval-arithmetic
-    // path (~ns) instead of JTS topology-graph relate (~100s of µs)
-    val im = if (g1.isRectangle && g2.isRectangle) {
-      val e1 = g1.getEnvelopeInternal; val e2 = g2.getEnvelopeInternal
-      new org.locationtech.jts.geom.IntersectionMatrix(
-        graft.geometry.RectIM.matrix(
-          e1.getMinX, e1.getMinY, e1.getMaxX, e1.getMaxY,
-          e2.getMinX, e2.getMinY, e2.getMaxX, e2.getMaxY))
-    } else g1.relate(g2)
-    val d1 = g1.getDimension; val d2 = g2.getDimension
-    new GenericInternalRow(Array[Any](
-      UTF8String.fromString(im.toString),
-      !im.isDisjoint,
-      im.isContains,
-      im.isWithin,
-      im.isCovers,
-      im.isCoveredBy,
-      im.isCrosses(d1, d2),
-      im.isOverlaps(d1, d2),
-      im.isTouches(d1, d2),
-      im.isEquals(d1, d2)))
+    StIm.row(Jts.relate(g1, g2), g1.getDimension, g2.getDimension)
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(l, r)
@@ -223,14 +220,28 @@ object StIm {
     StructField("overlaps", BooleanType, nullable = true),
     StructField("touches", BooleanType, nullable = true),
     StructField("equals", BooleanType, nullable = true)))
+
+  /** The output row of a complete matrix; d1, d2 are the operand
+    * dimensions the dimension-sensitive predicates need. */
+  def row(im: IntersectionMatrix, d1: Int, d2: Int): InternalRow =
+    new GenericInternalRow(Array[Any](
+      UTF8String.fromString(im.toString),
+      !im.isDisjoint,
+      im.isContains, im.isWithin, im.isCovers, im.isCoveredBy,
+      im.isCrosses(d1, d2), im.isOverlaps(d1, d2), im.isTouches(d1, d2),
+      im.isEquals(d1, d2)))
 }
 
-/** Adaptive DE-9IM verification: rectangles → analytic interval IM;
-  * large polygon pairs → exact segmented IM over cached θ-grid
-  * segments (cost bounded by the interaction neighbourhood); everything
-  * else → plain JTS relate. children: wkb1, wkb2, θx, θy, minPoints,
-  * earlyExit (literals). With earlyExit=true the segmented branch uses
-  * the reference's RANK-ordered early-exit accumulation
+/** Opt-in segmented DE-9IM verification, kept for the segmented-IM
+  * gate (sp10), `Scale`'s seg_* curves and the early-exit variant:
+  * polygon pairs (not both rectangles) with at least `minPoints`
+  * combined vertices go through [[graft.geometry.SegmentedIM]] over
+  * cached θ-grid segments; every other pair through [[Jts.relate]].
+  * The segmented form is slower than RelateNG at every size measured
+  * (SCALING.md), so the default join path ([[StIm]]) never takes it.
+  * children: wkb1, wkb2, θx, θy, minPoints, earlyExit (literals).
+  * With earlyExit=true the segmented branch uses the reference's
+  * RANK-ordered early-exit accumulation
   * ([[graft.geometry.SegmentedIM.imEarlyExit]]) — only the intersects
   * decision is contractual there, so it stays default-off AND every
   * other output column is emitted as NULL on that branch (never a
@@ -249,41 +260,25 @@ case class StImAdaptive(children: Seq[Expression]) extends Expression with Codeg
       children.length > 5 && children(5).eval(input).asInstanceOf[Boolean]
     val wkb1 = l.asInstanceOf[Array[Byte]]; val wkb2 = r.asInstanceOf[Array[Byte]]
     val g1 = GeomCache.geometry(wkb1); val g2 = GeomCache.geometry(wkb2)
-    var partialIm = false // early-exit branch: only `intersects` is contractual
-    val im =
-      if (g1.isRectangle && g2.isRectangle) {
-        val e1 = g1.getEnvelopeInternal; val e2 = g2.getEnvelopeInternal
-        new org.locationtech.jts.geom.IntersectionMatrix(
-          graft.geometry.RectIM.matrix(
-            e1.getMinX, e1.getMinY, e1.getMaxX, e1.getMaxY,
-            e2.getMinX, e2.getMinY, e2.getMaxX, e2.getMaxY))
-      } else if (g1.getDimension == 2 && g2.getDimension == 2 &&
-                 g1.getNumPoints + g2.getNumPoints >= minPts) {
-        if (earlyExit) {
-          partialIm = true
-          graft.geometry.SegmentedIM.imEarlyExit(g1, g2,
-            GeomCache.segments(wkb1, thetaX, thetaY),
-            GeomCache.segments(wkb2, thetaX, thetaY))
-        } else
-          graft.geometry.SegmentedIM.im(g1, g2,
-            GeomCache.segments(wkb1, thetaX, thetaY),
-            GeomCache.segments(wkb2, thetaX, thetaY))
-      } else g1.relate(g2)
     val d1 = g1.getDimension; val d2 = g2.getDimension
-    if (partialIm)
+    val segmented = d1 == 2 && d2 == 2 &&
+      g1.getNumPoints + g2.getNumPoints >= minPts &&
+      !(g1.isRectangle && g2.isRectangle)
+    if (!segmented) StIm.row(Jts.relate(g1, g2), d1, d2)
+    else if (earlyExit) {
+      val im = graft.geometry.SegmentedIM.imEarlyExit(g1, g2,
+        GeomCache.segments(wkb1, thetaX, thetaY),
+        GeomCache.segments(wkb2, thetaX, thetaY))
       // The accumulation stopped at the intersects decision, so every
       // other entry may be under-set; emit NULL there rather than a
       // silently wrong false (a disjoint result is complete: the
       // canonical FF2FF1212 came back and nulls stay correct-by-vacuity)
       new GenericInternalRow(Array[Any](
         null, !im.isDisjoint, null, null, null, null, null, null, null, null))
-    else
-      new GenericInternalRow(Array[Any](
-        UTF8String.fromString(im.toString),
-        !im.isDisjoint,
-        im.isContains, im.isWithin, im.isCovers, im.isCoveredBy,
-        im.isCrosses(d1, d2), im.isOverlaps(d1, d2), im.isTouches(d1, d2),
-        im.isEquals(d1, d2)))
+    } else
+      StIm.row(graft.geometry.SegmentedIM.im(g1, g2,
+        GeomCache.segments(wkb1, thetaX, thetaY),
+        GeomCache.segments(wkb2, thetaX, thetaY)), d1, d2)
   }
   override protected def withNewChildrenInternal(cs: IndexedSeq[Expression]): Expression =
     copy(cs)
@@ -501,8 +496,11 @@ object GeomFunctions {
   def st_intersection_area(l: Column, r: Column): Column =
     mk(StIntersectionArea(ex(l), ex(r)))
   def st_im(l: Column, r: Column): Column = mk(StIm(ex(l), ex(r)))
+  /** Segmentation is opt-in per call: without a `minPoints` cutoff no
+    * pair is segmented and the column equals [[st_im]]. */
   def st_im_adaptive(l: Column, r: Column, thetaX: Double, thetaY: Double,
-                     minPoints: Int = 64, earlyExit: Boolean = false): Column =
+                     minPoints: Int = Int.MaxValue,
+                     earlyExit: Boolean = false): Column =
     mk(StImAdaptive(Seq(ex(l), ex(r),
       org.apache.spark.sql.catalyst.expressions.Literal(thetaX),
       org.apache.spark.sql.catalyst.expressions.Literal(thetaY),

@@ -3,6 +3,7 @@ package graft.geometry
 import org.locationtech.jts.geom.{Envelope, Geometry, IntersectionMatrix}
 import org.locationtech.jts.operation.union.UnaryUnionOp
 import scala.jdk.CollectionConverters._
+import graft.functions.Jts
 
 /** Exact DE-9IM via θ-grid segments for POLYGONAL operands — the full
   * form of DS-JedAI's segmented verification (J8,
@@ -31,7 +32,7 @@ import scala.jdk.CollectionConverters._
   */
 object SegmentedIM {
 
-  /** Exact DE-9IM; falls back to plain relate for non-polygonal
+  /** Exact DE-9IM; falls back to [[Jts.relate]] for non-polygonal
     * operands or when segmentation cannot save work. */
   def im(a: Geometry, b: Geometry, thetaX: Double, thetaY: Double): IntersectionMatrix =
     im(a, b,
@@ -59,10 +60,10 @@ object SegmentedIM {
   def im(a: Geometry, b: Geometry,
          segsAIn: => Seq[(Long, Long, Geometry)],
          segsBIn: => Seq[(Long, Long, Geometry)]): IntersectionMatrix = {
-    if (a.getDimension != 2 || b.getDimension != 2) return a.relate(b)
+    if (a.getDimension != 2 || b.getDimension != 2) return Jts.relate(a, b)
     val envA = a.getEnvelopeInternal
     val envB = b.getEnvelopeInternal
-    if (!envA.intersects(envB)) return a.relate(b) // disjoint: cheap anyway
+    if (!envA.intersects(envB)) return Jts.relate(a, b) // disjoint: cheap anyway
 
     val segsA = segsAIn
     val segsB = segsBIn
@@ -95,7 +96,7 @@ object SegmentedIM {
     }
     val aTrimmed = candA.size < segsA.size
     val bTrimmed = candB.size < segsB.size
-    if (!aTrimmed && !bTrimmed) return a.relate(b) // no savings possible
+    if (!aTrimmed && !bTrimmed) return Jts.relate(a, b) // no savings possible
 
     if (candA.isEmpty || candB.isEmpty) {
       // geometries cannot touch: both polygonal → canonical disjoint
@@ -104,7 +105,7 @@ object SegmentedIM {
 
     val aPart = if (aTrimmed) UnaryUnionOp.union(candA.asJava) else a
     val bPart = if (bTrimmed) UnaryUnionOp.union(candB.asJava) else b
-    val im = aPart.relate(bPart)
+    val im = Jts.relate(aPart, bPart)
     if (aTrimmed) {
       im.set(0, 2, 2) // Interior(A) ∩ Exterior(B)
       im.set(1, 2, 1) // Boundary(A) ∩ Exterior(B)
@@ -138,7 +139,7 @@ object SegmentedIM {
   def imEarlyExit(a: Geometry, b: Geometry,
                   segsAIn: => Seq[(Long, Long, Geometry)],
                   segsBIn: => Seq[(Long, Long, Geometry)]): IntersectionMatrix = {
-    if (a.getDimension != 2 || b.getDimension != 2) return a.relate(b)
+    if (a.getDimension != 2 || b.getDimension != 2) return Jts.relate(a, b)
     if (!a.getEnvelopeInternal.intersects(b.getEnvelopeInternal))
       return new IntersectionMatrix("FF2FF1212")
     // Pair segments within a Chebyshev-distance-1 tile neighbourhood —
@@ -195,7 +196,7 @@ object SegmentedIM {
       val (r, (g1, g2)) = it.next()
       if (r == 3) done = true // sorted: every remaining pair is RANK0
       else {
-        val m = g1.relate(g2)
+        val m = Jts.relate(g1, g2)
         if (m.isIntersects) {
           im.add(m)
           intersected = true

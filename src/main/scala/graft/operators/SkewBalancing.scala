@@ -117,7 +117,7 @@ object SkewBalancing {
     * its pairs land on. Verification relates each source against the
     * batch union with the trimmed-exterior fixups of
     * [[graft.geometry.SegmentedIM]] — results are bit-equal to plain
-    * `st_im` (both are exactly JTS `relate`). */
+    * `st_im` (both verify with [[graft.functions.Jts.relate]]). */
   def rebalancedSegmentedDe9im(source: DataFrame, target: DataFrame,
                                zThreshold: Double = 3.0,
                                batchCap: Int = 256): DataFrame = {
@@ -216,7 +216,7 @@ object SkewBalancing {
       .repartition(spark.sessionState.conf.numShufflePartitions)
 
     val rebatched = batches.flatMap { b =>
-      import graft.functions.GeomCache
+      import graft.functions.{GeomCache, Jts}
       val union =
         if (b.union.isEmpty) null else GeomCache.geometry(b.union)
       b.s_ids.iterator.zip(b.s_geoms.iterator).map { case (sId, sWkb) =>
@@ -225,9 +225,9 @@ object SkewBalancing {
           if (union == null) // no candidate segments: disjoint polygons
             new org.locationtech.jts.geom.IntersectionMatrix("FF2FF1212")
           else if (!b.trimmed)
-            sGeom.relate(union) // union IS the full target
+            Jts.relate(sGeom, union) // union IS the full target
           else {
-            val m = sGeom.relate(union)
+            val m = Jts.relate(sGeom, union)
             m.set(2, 0, 2); m.set(2, 1, 1) // Exterior(S) x trimmed T
             m.set(2, 2, 2)
             m

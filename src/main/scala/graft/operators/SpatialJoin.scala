@@ -23,8 +23,10 @@ import graft.functions.GeomFunctions._
   *      the top-left corner of the MBR intersection — replicated pairs
   *      survive exactly once WITHOUT any dropDuplicates shuffle
   *      (reference: `linkers/LinkerT.scala:30-41`).
-  *   6. Verification — a single JTS relate per surviving pair via the
-  *      `st_im` expression (DE-9IM) or `st_predicate` (single relation).
+  *   6. Verification — one DE-9IM kernel call per surviving pair via
+  *      the `st_im` expression ([[graft.functions.Jts.relate]]: the
+  *      analytic matrix for rectangle pairs, JTS RelateNG otherwise) or
+  *      `st_predicate` (single relation, prepared JTS predicate).
   *
   * Scale: both sides shuffle once on the tile id; everything after is
   * pipelined map-side. Verification cost is proportional to surviving
@@ -246,15 +248,14 @@ object SpatialJoin {
     * semantics: only MBR-intersecting pairs are verified
     * (`linkers/GIAnt.scala:32-37`).
     *
-    * Verification is ADAPTIVE by default (identical results, spec-
-    * asserted): analytic interval IM for rectangle pairs, exact
-    * segmented IM above the point cutoff, plain JTS relate otherwise —
-    * rectangle-heavy workloads skip JTS entirely. */
+    * Verification is one [[graft.functions.Jts.relate]] call per pair
+    * (`st_im`): the analytic interval IM for rectangle pairs, so
+    * rectangle-heavy workloads skip JTS entirely, and JTS RelateNG for
+    * everything else, at any operand size. */
   def de9im(source: DataFrame, target: DataFrame, theta: Theta,
             spreadVerify: Boolean = false): DataFrame =
     candidatePairs(source, target, theta, spreadVerify = spreadVerify)
-      .withColumn("im", st_im_adaptive(col("s_geom"), col("t_geom"),
-        theta.x, theta.y))
+      .withColumn("im", st_im(col("s_geom"), col("t_geom")))
       .select(col("s_id"), col("t_id"), col("im.*"))
 
   def de9im(source: DataFrame, target: DataFrame): DataFrame =
@@ -268,10 +269,15 @@ object SpatialJoin {
             granularity: String): DataFrame =
     de9im(source, target, computeTheta(source, granularity))
 
-  /** DE-9IM with adaptive verification: analytic IM for rectangles,
-    * exact segmented IM for large polygon pairs (interaction-
-    * neighbourhood cost), plain relate otherwise. Results identical to
-    * [[de9im]]; use when operand size varies wildly.
+  /** DE-9IM with segmented verification, an explicit opt-in: polygon
+    * pairs with at least `minPoints` combined vertices go through the
+    * exact segmented IM ([[graft.geometry.SegmentedIM]]), every other
+    * pair through the same kernel as [[de9im]]. Results identical to
+    * [[de9im]]. Kept for the segmented-IM gate (sp10), `Scale`'s
+    * seg_exact / seg_earlyexit curves and the early-exit variant; it
+    * is slower than RelateNG at every size measured (SCALING.md, from
+    * the benchmark's star polygons up to a 4096-vertex polygon against
+    * small ones), so no default path uses it.
     *
     * `earlyExit = true` switches the segmented branch to the
     * reference's RANK-ordered early-exit accumulation (J8,

@@ -96,15 +96,8 @@ object TypedGiant {
                       val rcy = math.floor(ry / theta.y).toLong / coarsen
                       if (Jts.encodeTile(rcx, rcy) == key) {
                         val sg = Jts.fromWkb(s.geom)
-                        // same analytic shortcut as the expression path
-                        val im = if (sg.isRectangle && tg.isRectangle) {
-                          val e1 = sg.getEnvelopeInternal
-                          val e2 = tg.getEnvelopeInternal
-                          graft.geometry.RectIM.matrix(
-                            e1.getMinX, e1.getMinY, e1.getMaxX, e1.getMaxY,
-                            e2.getMinX, e2.getMinY, e2.getMaxX, e2.getMaxY)
-                        } else sg.relate(tg).toString
-                        out += ((s.id, t.id, im))
+                        // same kernel as the expression path
+                        out += ((s.id, t.id, Jts.relate(sg, tg).toString))
                       }
                     }
                   }
